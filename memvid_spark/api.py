@@ -27,6 +27,7 @@ from .functions.text import quality_score, token_count
 from .operators import ask as ask_mod
 from .operators import asof, knn as knn_mod, search as search_mod
 from .plans.parser import compile_predicate, parse_query
+from .session import local_frame
 
 PUT_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -324,7 +325,8 @@ class MemvidSpark:
             )
             for t in self._tables.values()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "table_id string, source_file string, page_start int, "
             "page_end int, n_rows int, n_cols int, mode string, "
@@ -384,7 +386,8 @@ class MemvidSpark:
             )
             if len(rows) >= top_k:
                 break
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "table_id string, row_index int, frame_id long, "
             "score double, row_text string",
@@ -440,7 +443,8 @@ class MemvidSpark:
             parts.append(self._media_seed)
         if self._media_puts:
             parts.append(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [
                         (int(i), m, bytes(p))
                         for i, m, p in self._media_puts
@@ -449,11 +453,17 @@ class MemvidSpark:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], self.MEDIA_SCHEMA)
+            return local_frame(self.spark, [], self.MEDIA_SCHEMA)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
         return df
+
+    def _id_frame(self, ids, col: str) -> DataFrame:
+        """A sorted driver-side id set as a one-column local frame."""
+        return local_frame(
+            self.spark, [(int(i),) for i in sorted(ids)], f"{col} long"
+        )
 
     def _has_media(self) -> bool:
         return self._media_seed is not None or bool(self._media_puts)
@@ -589,9 +599,7 @@ class MemvidSpark:
         pending = sorted(set(getattr(self, "_img_ann_pending", ())))
         dels = None
         if self._tombstones:
-            dels = self.spark.createDataFrame(
-                [(int(t),) for t in sorted(self._tombstones)], "vec_id long"
-            )
+            dels = self._id_frame(self._tombstones, "vec_id")
         if pending or dels is not None:
             delta_emb = None
             if pending:
@@ -605,8 +613,8 @@ class MemvidSpark:
                     F.col("emb").cast("array<double>").alias("embedding"),
                 )
             else:
-                delta_emb = self.spark.createDataFrame(
-                    [], "vec_id long, embedding array<double>"
+                delta_emb = local_frame(
+                    self.spark, [], "vec_id long, embedding array<double>"
                 )
             self._img_ann_index = apply_delta_ivf(
                 self._img_ann_index,
@@ -861,9 +869,7 @@ class MemvidSpark:
             | {i for kv in self._supersedes.items() for i in kv}
         )
         if referenced:
-            ref_df = self.spark.createDataFrame(
-                [(int(i),) for i in referenced], "_rid long"
-            )
+            ref_df = self._id_frame(referenced, "_rid")
             missing_ids = {
                 r[0]
                 for r in ref_df.join(
@@ -922,8 +928,8 @@ class MemvidSpark:
             else:
                 # distributed: recompute hashes in the scan, anti-join
                 # the (broadcast) registry — no corpus rows on the driver
-                sha_df = self.spark.createDataFrame(
-                    [(s,) for s in sorted(self._shas)], "sha string"
+                sha_df = local_frame(
+                    self.spark, [(s,) for s in sorted(self._shas)], "sha string"
                 )
                 missing = (
                     self.docs()
@@ -962,7 +968,7 @@ class MemvidSpark:
     def _union_docs(self) -> DataFrame:
         d = self._seed
         if self._puts:
-            new = self.spark.createDataFrame(self._puts, PUT_SCHEMA)
+            new = local_frame(self.spark, self._puts, PUT_SCHEMA)
             # seed may carry extra columns; align on the put schema
             if d is not None:
                 d = d.select("doc_id", "text", "lang", "source", "n_chars")
@@ -970,7 +976,7 @@ class MemvidSpark:
             else:
                 d = new
         if d is None:
-            d = self.spark.createDataFrame([], PUT_SCHEMA)
+            d = local_frame(self.spark, [], PUT_SCHEMA)
         return d
 
     def docs(self) -> DataFrame:
@@ -1358,7 +1364,7 @@ class MemvidSpark:
             + ", token_count long, length_hint long, short_text boolean,"
             + " top_terms array<long>, term_weight_sum long"
         )
-        one = self.spark.createDataFrame([row], schema)
+        one = local_frame(self.spark, [tuple(row.values())], schema)
         sk = self._sketch_df()
         if sk is not None:
             sk = sk.filter(F.col(self.id_col) != frame_id).unionByName(one)
@@ -1394,7 +1400,8 @@ class MemvidSpark:
         from .operators import sketchtrack
 
         words = sketchtrack.filter_word_cols(variant)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [],
             f"{self.id_col} long, simhash long, "
             + ", ".join(f"{w} long" for w in words)
@@ -1567,7 +1574,8 @@ class MemvidSpark:
         )
 
         res = self.ask(question, top_k=top_k, mask_pii=mask_pii)
-        cit = self.spark.createDataFrame(
+        cit = local_frame(
+            self.spark,
             [
                 (i + 1, int(fid), float(score))
                 for i, (fid, score) in enumerate(res.citations)
@@ -1647,7 +1655,7 @@ class MemvidSpark:
             # the pre-spill seed (an opened store's parquet) stays
             # where it is — only session adds land in the spill dir
             self._emb_spill_base = self._emb_seed
-        self.spark.createDataFrame(buf, self.EMB_SCHEMA).write.mode(
+        local_frame(self.spark, buf, self.EMB_SCHEMA).write.mode(
             "append"
         ).parquet(self._emb_spill_dir)
         buf.clear()
@@ -1676,9 +1684,9 @@ class MemvidSpark:
         if self._emb_seed is not None:
             parts.append(self._emb_seed)
         if buf:
-            parts.append(self.spark.createDataFrame(buf, self.EMB_SCHEMA))
+            parts.append(local_frame(self.spark, buf, self.EMB_SCHEMA))
         if not parts:
-            return self.spark.createDataFrame([], self.EMB_SCHEMA)
+            return local_frame(self.spark, [], self.EMB_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -2075,9 +2083,7 @@ class MemvidSpark:
             F.col("embedding").cast("array<double>").alias("embedding"),
         )
         if self._tombstones:
-            gone = self.spark.createDataFrame(
-                [(int(t),) for t in sorted(self._tombstones)], "vec_id long"
-            )
+            gone = self._id_frame(self._tombstones, "vec_id")
             emb = emb.join(gone, "vec_id", "left_anti")
         return emb
 
@@ -2099,33 +2105,17 @@ class MemvidSpark:
         pending = getattr(self, "_ann_pending", [])
         dels = None
         if self._tombstones:
-            dels = self.spark.createDataFrame(
-                [(int(t),) for t in sorted(self._tombstones)], "vec_id long"
-            )
+            dels = self._id_frame(self._tombstones, "vec_id")
         if pending or dels is not None:
             # array<float>, NOT double: the track stores float32
             # (EMB_SCHEMA), and the delta must round-trip through the
             # same precision or tie-adjacent neighbor orders diverge
-            # from a rebuild over the persisted track. Arrow-path
-            # createDataFrame (pandas input): the python-list form
-            # parallelizes across 32 PYTHON slices and every delta-
-            # planning action re-pays ~5 cpu_s of worker roundtrips
-            # (measured round 10); the Arrow form is JVM-side batches
-            import pandas as _pd
-
-            delta = self.spark.createDataFrame(
-                _pd.DataFrame(
-                    {
-                        "vec_id": [int(fid) for fid, _ in pending],
-                        "embedding": [
-                            [float(x) for x in v] for _, v in pending
-                        ],
-                    }
-                ),
-                "vec_id long, embedding array<float>",
+            # from a rebuild over the persisted track — local_frame
+            # casts at conversion. A bulk delta keeps a few slices for
+            # the cell assignment; a small one stays one partition.
+            delta = local_frame(
+                self.spark, pending, "vec_id long, embedding array<float>"
             ).coalesce(max(1, min(32, len(pending) // 5000)))
-            # Arrow slices small frames into per-row partitions; a
-            # handful of python tasks beats 32 near-empty ones
             self._ann_index = apply_delta_ivf(
                 self._ann_index,
                 delta,
@@ -2183,7 +2173,7 @@ class MemvidSpark:
         text = self._reader_text(payload)
         if len(text) < self.CHUNK_MIN_CHARS:
             return None
-        one = self.spark.createDataFrame([(0, text)], "doc_id long, text string")
+        one = local_frame(self.spark, [(0, text)], "doc_id long, text string")
         rows = chunk_documents(one).orderBy("chunk_index").collect()
         return [r.chunk_text for r in rows]
 
@@ -2220,8 +2210,10 @@ class MemvidSpark:
         other track."""
         rows = getattr(self, "_chunk_emb_puts", [])
         seed = getattr(self, "_chunk_emb_seed", None)
-        buf = self.spark.createDataFrame(
-            rows, "frame_id long, chunk_index long, embedding array<float>"
+        buf = local_frame(
+            self.spark,
+            rows,
+            "frame_id long, chunk_index long, embedding array<float>",
         )
         return buf if seed is None else seed.unionByName(buf)
 
@@ -2316,7 +2308,7 @@ class MemvidSpark:
 
     def cards(self) -> DataFrame:
         rows = getattr(self, "_cards", [])
-        return self.spark.createDataFrame(rows, self.CARD_SCHEMA)
+        return local_frame(self.spark, rows, self.CARD_SCHEMA)
 
     def get_current_memory(self, entity: str | None = None) -> DataFrame:
         """Latest non-retracted card per (entity, slot)
@@ -2437,8 +2429,8 @@ class MemvidSpark:
         rows = [
             (slot, vt, card) for slot, (vt, card) in sorted(self._schema_reg.items())
         ]
-        return self.spark.createDataFrame(
-            rows, "slot string, value_type string, cardinality string"
+        return local_frame(
+            self.spark, rows, "slot string, value_type string, cardinality string"
         )
 
     def set_schema_strict(self, strict: bool) -> None:
@@ -2546,9 +2538,9 @@ class MemvidSpark:
         nodes = getattr(self, "_mesh_nodes", None)
         edges = getattr(self, "_mesh_edges", None)
         if nodes is None:
-            nodes = self.spark.createDataFrame([], self.NODE_SCHEMA)
+            nodes = local_frame(self.spark, [], self.NODE_SCHEMA)
         if edges is None:
-            edges = self.spark.createDataFrame([], self.EDGE_SCHEMA)
+            edges = local_frame(self.spark, [], self.EDGE_SCHEMA)
         return nodes, edges
 
     def has_logic_mesh(self) -> bool:
@@ -2569,7 +2561,7 @@ class MemvidSpark:
         the whole batch: union + re-aggregate on the merge key, never a
         per-node driver loop."""
         self._ensure_writable()
-        new = self.spark.createDataFrame(nodes, self.NODE_SCHEMA)
+        new = local_frame(self.spark, nodes, self.NODE_SCHEMA)
         cur, _ = self.logic_mesh()
         merged = (
             cur.unionByName(new)
@@ -2600,7 +2592,7 @@ class MemvidSpark:
         """(add_mesh_edges, mesh.rs:80-85): existing edges win the
         dedup, like the reference's skip-if-present merge."""
         self._ensure_writable()
-        new = self.spark.createDataFrame(edges, self.EDGE_SCHEMA)
+        new = local_frame(self.spark, edges, self.EDGE_SCHEMA)
         _, cur = self.logic_mesh()
         # anti-join keeps the FIRST (existing) copy of a duplicate key
         fresh = new.join(
@@ -2932,9 +2924,7 @@ class MemvidSpark:
             ("supersedes", set(self._supersedes.values())),
         ):
             if vals:
-                ptr = self.spark.createDataFrame(
-                    [(int(v),) for v in sorted(vals)], "k long"
-                )
+                ptr = self._id_frame(vals, "k")
                 dangling = (
                     ptr.join(ids, "k", "left_anti")
                     .agg(F.count("*").alias("n_affected"))
@@ -2970,7 +2960,7 @@ class MemvidSpark:
             (seq, "search", f"{q}|k={k}|{','.join(map(str, ids))}", 0.0)
             for seq, q, k, ids in entries
         ]
-        return self.spark.createDataFrame(rows, self.REPLAY_SCHEMA)
+        return local_frame(self.spark, rows, self.REPLAY_SCHEMA)
 
     def replay_log(self) -> DataFrame:
         """The recorded session as a replay_actions table (SURVEY §1.2)."""

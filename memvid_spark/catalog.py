@@ -48,11 +48,12 @@ class Catalog:
             if name == "events" and isinstance(
                 df.schema["ts"].dataType, (TimestampType, TimestampNTZType)
             ):
-                # Engine contract: events.ts is epoch-ns long. Original test
-                # data is parquet TIMESTAMP(NANOS) which Spark reads as long
-                # ns under spark.sql.legacy.parquet.nanosAsLong; regenerated
-                # data ships timestamp[us] (TimestampType) — normalize so the
-                # whole operator surface sees one type either way.
+                # Engine contract: events.ts is epoch-ns long. The test
+                # data stores it as parquet timestamp[us], read as
+                # TimestampType — normalize it here. A TIMESTAMP(NANOS)
+                # file reads as long ns under
+                # spark.sql.legacy.parquet.nanosAsLong and skips this
+                # branch, so the operator surface sees one type either way.
                 # NTZ → LTZ cast is wall-clock; session tz is pinned UTC so
                 # it matches DuckDB's naive epoch_us() on the same file.
                 df = df.withColumn(

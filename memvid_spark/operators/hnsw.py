@@ -31,6 +31,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 GRAPH_SCHEMA = (
     "shard int, vec_id bigint, neighbors array<bigint>, "
     "embedding array<double>, entry boolean"
@@ -285,7 +287,7 @@ def _delete_ids(
         return dis.localCheckpoint(), None
     ids = sorted(int(r["vec_id"]) for r in head)
     return (
-        _local_frame(deletes.sparkSession, "vec_id bigint", vec_id=ids),
+        local_frame(deletes.sparkSession, [(i,) for i in ids], "vec_id bigint"),
         ids,
     )
 
@@ -689,9 +691,7 @@ def _train_groups(
         g: 1 + flo[g] + (1 if i < rem else 0)
         for i, g in enumerate(order)
     }
-    kg_df = emb.sparkSession.createDataFrame(
-        sorted(kg.items()), "grp int, kg int"
-    )
+    kg_df = local_frame(emb.sparkSession, sorted(kg.items()), "grp int, kg int")
 
     def train_group(pdf):
         import pandas as pd
@@ -1364,28 +1364,6 @@ DRIVER_DELTA_IDS_MAX = 262144
 DRIVER_DELTA_CELLS_MAX = 4096
 
 
-def _local_frame(spark, schema: str, **cols) -> DataFrame:
-    """Tiny driver-built frame via the ARROW path, one partition.
-    The python-list createDataFrame parallelizes over 32 PYTHON slices
-    — measured (r10) ~5 cpu_s of worker roundtrips per action, and on
-    the delta path each broadcast consumer of such a frame scheduled a
-    32-task build stage that was pure per-job floor. The Arrow form is
-    JVM-side batches (~0.2 cpu_s); schema casts apply during
-    conversion. Columns arrive as keyword lists; dtype pins keep empty
-    frames convertible (pandas infers float64 for a bare [])."""
-    import pandas as pd
-
-    def _series(v):
-        if v and isinstance(v[0], bool):  # before int: bool ⊂ int
-            return pd.Series(v, dtype="bool")
-        if v and isinstance(v[0], (list, tuple)):
-            return pd.Series(v, dtype="object")
-        return pd.Series(v, dtype="int64")
-
-    data = {k: _series(list(v)) for k, v in cols.items()}
-    return spark.createDataFrame(pd.DataFrame(data), schema).coalesce(1)
-
-
 # Near-tie rescue threshold for coarse assignment: decisions whose
 # winner-vs-runner-up d2 gap is below _TIE_REL x (row scale) are re-made
 # on the fixed-order (einsum) distances. BLAS GEMM blocks by matrix
@@ -1781,10 +1759,7 @@ def _build_cells(
             "raise stride or max_shard_rows"
         )
     spark = assigned.sparkSession
-    subs_df = _local_frame(
-        spark, "cell int, subs int",
-        cell=sorted(subs), subs=[subs[c] for c in sorted(subs)],
-    )
+    subs_df = local_frame(spark, sorted(subs.items()), "cell int, subs int")
     sharded = (
         assigned.join(F.broadcast(subs_df), "cell")
         .withColumn(
@@ -1936,12 +1911,15 @@ def apply_delta_ivf(
     writes (streaming/annsink.py is one). ``n_hint`` is the delta's
     row count when the caller knows it (skips the bounded planning
     take on batches known to exceed the driver-id bound, and the
-    frame-model assignment's split-sizing count)."""
-    keep, rebuilt, _, _ = _delta_ivf_parts(
+    frame-model assignment's split-sizing count). The result keeps the
+    input index's partition count (a narrow coalesce of the union):
+    pass-through rows carry the old partitions, so without it every
+    delta would add the rebuilt side's partitions on top."""
+    keep, rebuilt, _, _, n_parts = _delta_ivf_parts(
         index, new_emb, centroids, m, ef_construction, id_col, vec_col,
         max_shard_rows, stride, deletes, n_hint,
     )
-    return keep.unionByName(rebuilt)
+    return keep.unionByName(rebuilt).coalesce(n_parts)
 
 
 def apply_delta_ivf_parts(
@@ -1968,7 +1946,7 @@ def apply_delta_ivf_parts(
     driver-resident (the planning agg computed them — the sink pays
     no checkpoint job and no distinct-cells probe over the rebuilt
     rows to learn which directories drained)."""
-    _, rebuilt, touched, built = _delta_ivf_parts(
+    _, rebuilt, touched, built, _ = _delta_ivf_parts(
         index, new_emb, centroids, m, ef_construction, id_col, vec_col,
         max_shard_rows, stride, deletes, n_hint,
     )
@@ -1987,10 +1965,11 @@ def _delta_ivf_parts(
     stride: int,
     deletes: DataFrame | None,
     n_hint: int | None = None,
-) -> tuple[DataFrame, DataFrame, list[int], list[int]]:
+) -> tuple[DataFrame, DataFrame, list[int], list[int], int]:
     """(keep = untouched cells, rebuilt = cell-complete new content of
     every touched cell, touched = the tiny cell-id LIST, built = the
-    touched cells whose rebuild has ≥1 row — touched ∖ built drained)
+    touched cells whose rebuild has ≥1 row — touched ∖ built drained,
+    n_parts = the index's partition count, read in the corpus scan)
     — see ``apply_delta_ivf``.
 
     Sub-shard granularity: a touched cell whose sub-shard count does
@@ -2053,8 +2032,6 @@ def _delta_ivf_parts(
         if len(head) > DRIVER_DELTA_IDS_MAX:
             head = None
     if head is not None:
-        import pandas as pd
-
         add_cnt: dict[int, int] = {}
         add_min: dict[int, int] = {}
         add_hash: dict[int, list[int]] = {}
@@ -2066,30 +2043,23 @@ def _delta_ivf_parts(
                 add_min[c] = v
             add_hash.setdefault(c, []).append(int(r["_h"]))
             id_set.add(v)
-        # Arrow-path local frames (measured r10: ~0.2 cpu_s per action
-        # vs ~5 for the 32-slice python-list form); float64 embeddings
-        # round-trip exactly (collected doubles ARE python floats)
-        new_assigned = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [int(r["cell"]) for r in head],
-                    "vec_id": [int(r["vec_id"]) for r in head],
-                    "embedding": [
-                        [float(x) for x in r["embedding"]] for r in head
-                    ],
-                }
-            ),
+        # the delta rows re-materialize as a local relation: collected
+        # doubles ARE python floats, so embeddings round-trip exactly
+        new_assigned = local_frame(
+            spark,
+            [(r["cell"], r["vec_id"], r["embedding"]) for r in head],
             "cell int, vec_id bigint, embedding array<double>",
-        ).coalesce(1)
-        new_ids = _local_frame(
-            spark, "vec_id bigint", vec_id=sorted(id_set)
+        )
+        new_ids = local_frame(
+            spark, [(v,) for v in sorted(id_set)], "vec_id bigint"
         )
         if del_list is not None:
             # both sides driver-resident: the distinct union is driver
             # set algebra, not a 2-job AQE aggregate over local rows
-            gone_ids = _local_frame(
-                spark, "vec_id bigint",
-                vec_id=sorted(id_set | set(del_list)),
+            gone_ids = local_frame(
+                spark,
+                [(v,) for v in sorted(id_set | set(del_list))],
+                "vec_id bigint",
             )
         elif del_ids is not None:
             gone_ids = new_ids.unionByName(del_ids).distinct()
@@ -2116,9 +2086,13 @@ def _delta_ivf_parts(
     # rows come from the delta take above. The shard sets are bounded
     # by each cell's sub-shard count (map-side combined), so the
     # driver receives the same volume as the (cell, shard) directory
-    # nsw_knn_join already broadcasts — KB per thousand cells.
+    # nsw_knn_join already broadcasts — KB per thousand cells. The
+    # largest partition id seen is the index's partition count − 1.
     both = (
-        index.join(
+        index.select(
+            "cell", "shard", "vec_id", F.spark_partition_id().alias("_pid")
+        )
+        .join(
             F.broadcast(gone_ids.withColumn("_g", F.lit(1))),
             "vec_id",
             "left",
@@ -2132,9 +2106,11 @@ def _delta_ivf_parts(
             F.collect_set(
                 F.when(F.col("_g") == 1, F.col("shard"))
             ).alias("gsh"),
+            F.max("_pid").alias("pid"),
         )
         .collect()
     )
+    n_parts = 1 + max((int(r["pid"]) for r in both), default=0)
     old_cnt = {int(r["cell"]): int(r["c"]) for r in both}
     rem_cnt = {int(r["cell"]): int(r["g"]) for r in both if int(r["g"])}
     old_max = {int(r["cell"]): int(r["mx"]) for r in both}
@@ -2144,8 +2120,9 @@ def _delta_ivf_parts(
     }
     touched = sorted(set(add_cnt) | set(rem_cnt))
     if not touched:
-        return index, spark.createDataFrame([], CELL_GRAPH_SCHEMA), [], []
-    touched_df = _local_frame(spark, "cell int", cell=touched)
+        empty = local_frame(spark, [], CELL_GRAPH_SCHEMA)
+        return index, empty, [], [], n_parts
+    touched_df = local_frame(spark, [(c,) for c in touched], "cell int")
     keep = index.join(F.broadcast(touched_df), "cell", "left_anti")
     # pin the touched cells' rows ONCE (delta-locality-bounded — the
     # same volume the rebuild shuffles anyway); every consumer below
@@ -2207,10 +2184,8 @@ def _delta_ivf_parts(
                 *[F.lit(x) for cn in sorted(need_probe.items()) for x in cn]
             )[F.col("cell")]
         else:
-            np_df = _local_frame(
-                spark, "cell int, nsubs int",
-                cell=sorted(need_probe),
-                nsubs=[need_probe[c] for c in sorted(need_probe)],
+            np_df = local_frame(
+                spark, sorted(need_probe.items()), "cell int, nsubs int"
             )
             cand_rows = touched_rows.join(F.broadcast(np_df), "cell")
             nsubs_col = F.col("nsubs")
@@ -2274,11 +2249,8 @@ def _delta_ivf_parts(
             m, ef_construction, max_shard_rows, stride,
             cell_counts=new_sizes,
         )
-        return keep, rebuilt, touched, built
-    elig_df = _local_frame(
-        spark, "cell int, nsubs int",
-        cell=sorted(elig), nsubs=[elig[c] for c in sorted(elig)],
-    )
+        return keep, rebuilt, touched, built, n_parts
+    elig_df = local_frame(spark, sorted(elig.items()), "cell int, nsubs int")
     # ---- ineligible touched cells: whole-cell rebuild --------------
     inelig_cells = [c for c in touched if c not in elig]
     if inelig_cells:
@@ -2296,7 +2268,7 @@ def _delta_ivf_parts(
     else:
         # every touched cell is sub-granular eligible — don't spend a
         # plan (and _build_cells' planning) on a provably empty branch
-        rebuilt_inelig = spark.createDataFrame([], CELL_GRAPH_SCHEMA)
+        rebuilt_inelig = local_frame(spark, [], CELL_GRAPH_SCHEMA)
     # ---- eligible cells: rebuild only the changed sub-shards -------
     delta_e = (
         new_assigned.join(F.broadcast(elig_df), "cell")
@@ -2332,10 +2304,7 @@ def _delta_ivf_parts(
             for r in delta_e.select("cell", "shard").distinct().collect()
         }
     _ts = sorted(gone_subs | delta_subs)
-    touched_subs = _local_frame(
-        spark, "cell int, shard int",
-        cell=[c for c, _ in _ts], shard=[sh for _, sh in _ts],
-    )
+    touched_subs = local_frame(spark, _ts, "cell int, shard int")
     sub_keep = old_e.join(
         F.broadcast(touched_subs), ["cell", "shard"], "left_anti"
     )
@@ -2348,10 +2317,9 @@ def _delta_ivf_parts(
         F.broadcast(touched_subs), ["cell", "shard"], "left_semi"
     ).join(new_ids, "vec_id", "left_anti")
     if append_cells and len(append_cells) > DRIVER_DELTA_CELLS_MAX:
-        app_df = _local_frame(
-            spark, "cell int, _app boolean",
-            cell=sorted(append_cells),
-            _app=[True] * len(append_cells),
+        app_df = local_frame(
+            spark, [(c, True) for c in sorted(append_cells)],
+            "cell int, _app boolean",
         )
         old_e_kept = old_e_kept.join(F.broadcast(app_df), "cell", "left")
         keep_nbrs = F.coalesce(F.col("_app"), F.lit(False))
@@ -2390,7 +2358,7 @@ def _delta_ivf_parts(
             "cell", "shard", "vec_id", "neighbors", "embedding", "entry"
         )
     )
-    return keep, rebuilt, touched, built
+    return keep, rebuilt, touched, built, n_parts
 
 
 def ivf_cell_stats(index: DataFrame) -> DataFrame:

@@ -34,6 +34,13 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
+def _sql_str(t: str) -> str:
+    r"""``t`` as a Spark SQL string literal. The parser reads ``\\``
+    and ``\'`` inside quotes as escapes, so both are escaped: a term
+    ending in a backslash would otherwise swallow the closing quote."""
+    return "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def build_postings(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -89,10 +96,7 @@ def lex_topk(
         F.col(id_col), F.col(text_col), tokens_pinned(text_col).alias("_toks")
     )
     occ_sql = " + ".join(
-        "size(filter(_toks, x -> x = '{}'))".format(
-            t.lower().replace("'", "''")
-        )
-        for t in terms
+        f"size(filter(_toks, x -> x = {_sql_str(t.lower())}))" for t in terms
     )
     score = F.expr(f"CAST(({occ_sql}) AS DOUBLE)")
     if phrase:
@@ -182,9 +186,6 @@ def bm25_topk(
     # literal values replicated exactly — k1+1, 1-b etc. are the same
     # Python-computed doubles via repr round-trip; the oracle
     # hash-match at both SFs pins the IEEE equivalence).
-    def esc(t: str) -> str:
-        return t.replace("'", "''")
-
     # Per-term tf stays the higher-order filter form, NOT
     # size-diff-of-array_remove: a measured round-12 NEGATIVE result.
     # array_remove(tf) is 1.2-1.3x faster in steady state (it compiles;
@@ -198,7 +199,7 @@ def bm25_topk(
         F.expr("size(_toks) AS dl"),
         *[
             F.expr(
-                f"size(filter(_toks, x -> x = '{esc(tt)}')) AS _tf{i}"
+                f"size(filter(_toks, x -> x = {_sql_str(tt)})) AS _tf{i}"
             )
             for i, tt in enumerate(terms_lc)
         ],
@@ -321,13 +322,10 @@ def bm25f_topk(
 
     # single-string expressions like bm25_topk (round 12) — same py4j
     # construction-cost motive, same exact operator order
-    def esc(t: str) -> str:
-        return t.replace("'", "''")
-
     def occ_sql(field: str, tt: str) -> str:
         # HOF form by the same measured JIT-warmup negative result as
         # bm25_topk's per-term tf
-        return f"size(filter({field}, x -> x = '{esc(tt)}'))"
+        return f"size(filter({field}, x -> x = {_sql_str(tt)}))"
 
     per = fields.select(
         F.col(id_col),

@@ -21,8 +21,9 @@ from pyspark.sql import SparkSession
 RUNTIME_CONFS = {
     # deterministic timestamp rendering / truncation across engines
     "spark.sql.session.timeZone": "UTC",
-    # the driver's events table is parquet TIMESTAMP(NANOS); Spark reads it
-    # as long nanos with this legacy flag (Spark has no ns timestamp type)
+    # a parquet TIMESTAMP(NANOS) events table reads as long nanos with this
+    # legacy flag (Spark has no ns timestamp type); timestamp[us] files
+    # are normalized in catalog.Catalog.table
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # runtime re-planning: partition coalescing + skew-join splitting
     "spark.sql.adaptive.enabled": "true",
@@ -81,6 +82,34 @@ def configure(spark: SparkSession) -> SparkSession:
             # non-runtime-settable in some deployment; keep going
             pass
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str):
+    """A small driver-built frame as a JVM local relation, one partition.
+
+    ``rows`` are tuples in the column order of ``schema`` (a DDL
+    string). They convert to one Arrow table on the driver, so the
+    plan leaf is a ``LocalTableScan``: scanning the frame, or anything
+    unioned or joined with it, starts no Python worker, and a broadcast
+    of it costs no build-stage job. Values cast to the schema's types
+    during the conversion — a double in an ``array<float>`` column
+    lands as the nearest float32, exactly what the parquet track
+    stores. The list form ``createDataFrame(rows, schema)`` instead
+    scans a Python RDD of ``defaultParallelism`` slices, re-run on
+    every action. This path does not depend on the session's Arrow
+    conf, so plain sessions get the same plan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct).coalesce(1)
 
 
 def fan_out(df):

@@ -555,3 +555,31 @@ def test_frame_model_drift_retrain_stays_frame(spark):
     )
     assert isinstance(mv._ann_cents, CentroidFrame)
     assert mv._ann_meta["model"] == "frame"
+
+
+def test_refreshes_keep_served_index_partition_count(spark, tmp_path):
+    """Each refresh's delta unions pass-through cells (the old
+    partitions) with the rebuilt ones; the served index must stay at
+    the opened index's partition count, not grow per upsert, and still
+    equal a rebuild over the final track."""
+    from memvid_spark.operators.hnsw import build_nsw_index_ivf
+
+    mv = _store_with_vectors(spark)
+    mv.build_ann_serving(n_cells=4, m=8, ef_construction=60, probes=2)
+    path = str(tmp_path / "store")
+    mv.save(path)
+    re = MemvidSpark.open(spark, path)
+    opened = re._ann_index.rdd.getNumPartitions()
+    for t in range(3):
+        new = _unit_blob_pairs(n_blobs=1, per_blob=10, start_id=9000 + 100 * t)
+        re.add_embeddings(new)
+        re.refresh_ann_index()
+        assert re._ann_index.rdd.getNumPartitions() <= opened
+    full = build_nsw_index_ivf(
+        re._ann_active_track(), re._ann_cents, m=8, ef_construction=60
+    )
+    ra = sorted((r.cell, r.shard, r.vec_id, tuple(r.neighbors))
+                for r in re._ann_index.collect())
+    rb = sorted((r.cell, r.shard, r.vec_id, tuple(r.neighbors))
+                for r in full.collect())
+    assert ra == rb

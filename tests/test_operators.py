@@ -486,3 +486,58 @@ def test_simhash_packed_votes_match_reference_sum(spark):
     got = {r.doc_id: r.simhash for r in simhash_table(docs).collect()}
     want = {r.doc_id: r.simhash for r in reference(docs).collect()}
     assert got == want
+
+
+def test_term_literals_escape_backslash_and_quote(spark):
+    """Query terms reach the bm25/lex SQL strings through one escape:
+    a trailing backslash, a quote, or both, parse and match exactly as
+    a Column-built filter over the same tokens does."""
+    from memvid_spark.functions.text import tokens
+    from memvid_spark.operators.search import (
+        _sql_str,
+        bm25_topk,
+        bm25f_topk,
+        lex_topk,
+    )
+
+    hostile = ["foo\\", "it's", "a\\'b"]
+    arrs = spark.createDataFrame(
+        [(1, hostile + ["foo\\"]), (2, ["plain"])],
+        "id long, _toks array<string>",
+    )
+    for t in hostile:
+        sql = arrs.select(
+            "id", F.expr(f"size(filter(_toks, x -> x = {_sql_str(t)}))")
+        ).collect()
+        col = arrs.select(
+            "id", F.size(F.filter("_toks", lambda x: x == F.lit(t)))
+        ).collect()
+        assert [tuple(r) for r in sql] == [tuple(r) for r in col]
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark engine spark notes"),
+            (2, "engine notes about it s"),
+            (3, "gardening soil"),
+        ],
+        "doc_id long, text string",
+    )
+    terms = ["spark", "notes"] + hostile
+
+    def count(t):
+        return F.size(F.filter(tokens("text"), lambda x: x == F.lit(t)))
+
+    occ = sum(count(t) for t in terms).cast("double")
+    want = (
+        docs.select("doc_id", occ.alias("score"))
+        .filter("score > 0")
+        .orderBy(F.col("score").desc(), "doc_id")
+        .collect()
+    )
+    assert lex_topk(docs, terms, k=5).collect() == want
+    # hostile terms match no token, so they add exactly 0 to each score
+    for topk in (bm25_topk, bm25f_topk):
+        assert (
+            topk(docs, terms, k=5).collect()
+            == topk(docs, ["spark", "notes"], k=5).collect()
+        )

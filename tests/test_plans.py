@@ -7,6 +7,8 @@ TakeOrderedAndProject (per-partition heaps, no full sort), and no
 cartesian products anywhere in the inventory.
 """
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -55,23 +57,34 @@ def test_knn_plan_is_scan_project_topk(spark):
     assert "Join" not in plan
 
 
-def test_no_cartesian_products_in_inventory(spark):
-    """Every registry query must avoid CartesianProduct — similarity
-    joins must stay LSH-bucketed / broadcast (O(n^2) guards)."""
+@pytest.fixture(scope="module")
+def inventory_plans(spark):
+    """Executed plan of every registry query, built once for this module:
+    name -> plan string, or the exception raised while planning it."""
     from memvid_spark import registry
 
-    skip = {"q34_pq_recall"}  # driver-side recall harness, not one plan
-    offenders = []
+    plans = {}
     for s in registry.SPECS:
-        if s.name in skip:
-            continue
         try:
-            plan = _plan(s.fn(spark, SF_DIR))
+            plans[s.name] = _plan(s.fn(spark, SF_DIR))
         except Exception as e:  # pragma: no cover - surface as failure
-            offenders.append((s.name, f"plan build failed: {e}"))
-            continue
-        if "CartesianProduct" in plan:
-            offenders.append((s.name, "CartesianProduct"))
+            plans[s.name] = e
+    return plans
+
+
+def test_no_cartesian_products_in_inventory(inventory_plans):
+    """Every registry query (q34 included) must plan, and none may plan a
+    CartesianProduct — similarity joins must stay LSH-bucketed /
+    broadcast (O(n^2) guards). Failures are reported per query."""
+    from memvid_spark import registry
+
+    assert list(inventory_plans) == [s.name for s in registry.SPECS]
+    offenders = []
+    for name, plan in inventory_plans.items():
+        if isinstance(plan, Exception):
+            offenders.append((name, f"plan build failed: {plan}"))
+        elif "CartesianProduct" in plan:
+            offenders.append((name, "CartesianProduct"))
     assert not offenders, offenders
 
 
@@ -255,16 +268,14 @@ def test_cluster_by_zorder_improves_two_column_locality(spark):
     assert zx < n * 0.5 and zy < n * 0.5
 
 
-def test_plan_lint_no_cartesian_product_any_query(spark):
+def test_plan_lint_no_cartesian_product_any_query(inventory_plans):
     """Sweep EVERY registry query's physical plan for CartesianProduct —
     the one join shape that is always wrong at 100 TB. Legitimate
     1-row/broadcast cross joins compile to BroadcastNestedLoopJoin and
     pass; an accidental unkeyed join regression fails here by name."""
-    from memvid_spark import registry
-
-    offenders = []
-    for s in registry.SPECS:
-        df = s.fn(spark, SF_DIR)
-        if "CartesianProduct" in _plan(df):
-            offenders.append(s.name)
+    offenders = [
+        name
+        for name, plan in inventory_plans.items()
+        if not isinstance(plan, Exception) and "CartesianProduct" in plan
+    ]
     assert offenders == [], f"CartesianProduct in: {offenders}"
